@@ -184,8 +184,12 @@ def bench_replay(spark, n_events: int) -> dict:
     }
 
 
-def bench_queries(spark, sf_dir: str, reps: int = 3) -> dict[str, float]:
-    """Median of ``reps`` timed runs per query, in pinned list order.
+def bench_queries(
+    spark, sf_dir: str, reps: int = 3
+) -> tuple[dict[str, float], dict[str, float]]:
+    """(median seconds, 1-minute loadavg) per query, in pinned list order:
+    the median of ``reps`` timed runs, and the load read right after the
+    query's last rep (the per-query weather the artifact records).
 
     Run-to-run variance on this box is up to ~25% (page cache, turbo,
     codegen warmup displacement); single-shot timings made round-over-

@@ -1,50 +1,70 @@
-"""Synthetic-binlog FILE export: frame the engine's net-change stream as
-genuine MySQL binlog-v4 files — magic, FORMAT_DESCRIPTION, per-transaction
-BEGIN / TABLE_MAP / <=8KB-chunked WRITE_ROWS / XID, ROTATE trailer, CRC32
-footers — plus the parser that reads them back.
+"""Binlog FILE export: frame the engine's snapshot and net-change streams
+as genuine MySQL binlog-v4 files — magic, FORMAT_DESCRIPTION, per
+transaction BEGIN / TABLE_MAP / <=8KB-chunked ROWS / XID, ROTATE trailer,
+CRC32 footers — plus the parser that reads them back.
 
-This is the one reference OUTPUT format the engine previously had no
-byte-level analog for (round-3 judge "missing #4"): the reference's
-restitute path writes compacted per-table binlog files through go-mysql's
-event encoders (common/log/bin.go:28-207 — file header, FDE, BEGIN,
-TableMap, rows chunks cut at the 8KB BinlogBufferSize, XID, rotate;
-backup/binlog/repl.go:706-992 drives it per table). The framing here is
-the PUBLIC binlog v4 layout (MySQL internals manual): 19-byte event
-headers (timestamp, type, server_id, event_size, log_pos, flags), body,
-CRC32-IEEE footer (BINLOG_CHECKSUM_ALG_CRC32); log_pos is the event's END
-position as real servers write it.
+The reference writes every compacted output through one set of go-mysql
+event encoders (common/log/bin.go:28-207; backup/binlog/repl.go:706-992
+drives it per table), and so does this module: one codec, with a
+``_Layout`` value naming what differs between the two exports — the
+TABLE_MAP columns (BLOBs, meta=4 → 4-byte length prefixes), the op passes
+with their ROWS event types and columns-present bitmaps, and file naming.
+The framing is the PUBLIC binlog v4 layout (MySQL internals manual):
+19-byte headers (timestamp, type, server_id, event_size, log_pos, flags),
+body, CRC32-IEEE footer; log_pos is the event's END position.
 
-Row payload layout (2 BLOB columns, meta=4 → 4-byte length prefixes):
+Snapshot (``write_binlog_files``): table ``files``, 2 columns, I only,
+files ``binlog-{repo}.log`` (``binlog-{repo}.{seg:05d}.log`` rotated):
 
-    key   = repo \\x00 path
-    value = commit \\x00 (\\x00 | \\x01 lang) \\x00 content
+    WRITE_ROWS  (I): bitmap 0b11 -> key, value
+        key   = repo \\x00 path
+        value = commit \\x00 (\\x00 | \\x01 lang) \\x00 content
 
-Chunking rule (SQL-reproducible, mirroring the reference's accumulate-
-then-flush-on-overflow buffer): within a transaction rows are ordered by
-path; a row belongs to chunk floor(cum_bytes_before_row / 8192) where a
-row's size is 1 (null bitmap) + 4 + len(key) + 4 + len(value). A chunk
-may overshoot 8192 by at most one row — exactly the reference's
-`size > BinlogBufferSize` flush (backup/binlog/repl.go:909). The DuckDB
-oracle recomputes the same assignment with octet_length + a window
-cumsum, so `cdc_binlog_file_export` cross-checks the framing rule itself.
+Net-change (``write_netchange_binlog_files``): table ``changes``, 3
+columns (key, commit, content) with binlog-v2 partial row images, files
+``{repo}/chg_{start_seq:010d}_{end_seq:010d}.log[.z]``:
 
-Scale shape: one transaction (and one file) per repo, built inside
-applyInPandas — each group's bytes are assembled and written ON THE
-EXECUTOR (no driver collect); the return value is a small per-file
-manifest. Parsing reads Spark's binaryFile source -> mapInPandas decode,
-verifying magic, event sizes and every CRC32.
+    WRITE_ROWS  (I): after image,  bitmap 0b111 -> key, new_commit, new_content
+    DELETE_ROWS (D): before image, bitmap 0b101 -> key, old_content
+    UPDATE_ROWS (U): before 0b101 (key, old_content)
+                     + after 0b111 (key, new_commit, new_content)
+
+A file holds one transaction per non-empty pass, in pass order; I, D, U
+is the reference's dumpBinlog (backup/binlog/repl.go:770-800), with its
+{type}_{start}_{end} naming (common/inter/constant.go:82,134-136), zlib
+(common/client/cfs.go:62-68) and tar consolidation (cfs.go:84-171).
+Start/end are SEQ bounds, the engine's monotone analog of the
+reference's flush timestamps.
+
+Chunking rule (the reference's accumulate-then-flush-on-overflow buffer,
+`size > BinlogBufferSize`, backup/binlog/repl.go:909): within a
+transaction a row goes to chunk floor(cum_bytes_before_row / 8192), a
+row's size being, per image, 1 (null bitmap) + sum(4 + len(column)).
+The DuckDB oracle of `cdc_binlog_file_export` recomputes the snapshot
+assignment with octet_length + a window cumsum. Rotation
+(``max_file_bytes``) applies the same rule one level up — a window
+cumsum of the layout's Spark size expression (built from the same column
+definitions as the encoder) picks each row's segment, and writer tasks
+group by (repo, segment), so a hot repo's segments spread over the
+cluster. Each segment is a self-describing file whose xids advance by the
+number of passes. Files are written ON THE EXECUTORS; parsing reads
+Spark's binaryFile source -> mapInPandas, verifying every CRC32.
 """
 
 from __future__ import annotations
 
 import hashlib
+import io
+import operator
 import os
 import struct
+import tarfile
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,38 +87,49 @@ SERVER_ID = 1
 SERVER_VERSION = b"5.7.99-mysql-binlog-spark"
 TABLE_ID = 1
 _POST_HEADER_LENS = 39  # v4 post-header length table size we emit
+NETCHANGE_KIND = "chg"
 
-FILE_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_chunks", T.LongType(), False),
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("file_sha256", T.StringType(), False),
-    ]
+_U32 = struct.Struct("<I")
+
+_S, _L = T.StringType(), T.LongType()
+
+
+def _struct(*fields: tuple[str, T.DataType, bool]) -> T.StructType:
+    return T.StructType([T.StructField(*f) for f in fields])
+
+
+FILE_MANIFEST_SCHEMA = _struct(
+    ("repo", _S, False), ("file_name", _S, False), ("n_rows", _L, False),
+    ("n_chunks", _L, False), ("byte_len", _L, False),
+    ("file_sha256", _S, False),
+)
+PARSED_ROW_SCHEMA = _struct(
+    ("repo", _S, False), ("path", _S, False), ("commit", _S, True),
+    ("lang", _S, True), ("content", _S, True), ("chunk_idx", _L, False),
+    ("xid", _L, False),
+)
+NETCHANGE_MANIFEST_SCHEMA = _struct(
+    ("repo", _S, False), ("file_name", _S, False), ("n_rows", _L, False),
+    ("n_inserts", _L, False), ("n_deletes", _L, False),
+    ("n_updates", _L, False), ("start_seq", _L, False),
+    ("end_seq", _L, False), ("byte_len", _L, False),
+    ("compressed", T.BooleanType(), False), ("file_sha256", _S, False),
+)
+NETCHANGE_ROW_SCHEMA = _struct(
+    ("repo", _S, False), ("path", _S, False), ("diff_op", _S, False),
+    ("old_content", _S, True), ("new_content", _S, True),
+    ("new_commit", _S, True), ("chunk_idx", _L, False), ("xid", _L, False),
 )
 
-PARSED_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("commit", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("chunk_idx", T.LongType(), False),
-        T.StructField("xid", T.LongType(), False),
-    ]
-)
+
+# -- event encoders ---------------------------------------------------------
 
 
 def _event(etype: int, body: bytes, log_pos: int, ts: int = 0,
            flags: int = 0) -> bytes:
     """One framed event: 19-byte header + body + CRC32(header+body)."""
     size = HEADER_LEN + len(body) + 4
-    header = struct.pack(
-        "<IBIIIH", ts, etype, SERVER_ID, size, log_pos + size, flags
-    )
+    header = struct.pack("<IBIIIH", ts, etype, SERVER_ID, size, log_pos + size, flags)
     crc = zlib.crc32(header + body) & 0xFFFFFFFF
     return header + body + struct.pack("<I", crc)
 
@@ -107,18 +138,15 @@ def _fde_body() -> bytes:
     """FORMAT_DESCRIPTION: binlog_version=4, 50-byte server version,
     create_ts, header_len, post-header length table, checksum alg byte."""
     post = bytearray(_POST_HEADER_LENS)
-    post[QUERY_EVENT - 1] = 13
-    post[ROTATE_EVENT - 1] = 8
-    # the FDE's self-entry is its own fixed-part size, computed from the
-    # actual body layout (2 version + 50 server-version + 4 create_ts +
-    # 1 header_len + the post-header table itself) — a strict external
-    # binlog-v4 consumer validates this value (round-4 ADVICE: the old
-    # hardcoded 84 described MySQL 5.1's 27-entry table, not ours)
-    post[FORMAT_DESCRIPTION_EVENT - 1] = 2 + 50 + 4 + 1 + _POST_HEADER_LENS
-    post[TABLE_MAP_EVENT - 1] = 8
-    post[WRITE_ROWS_EVENT_V2 - 1] = 10
-    post[UPDATE_ROWS_EVENT_V2 - 1] = 10
-    post[DELETE_ROWS_EVENT_V2 - 1] = 10
+    # the FDE's self-entry is its own fixed-part size (2 version + 50
+    # server-version + 4 create_ts + 1 header_len + this table), which a
+    # strict binlog-v4 consumer validates (MySQL 5.1's 84 is a 27-entry
+    # table's)
+    for etype, n in ((QUERY_EVENT, 13), (ROTATE_EVENT, 8), (TABLE_MAP_EVENT, 8),
+                     (FORMAT_DESCRIPTION_EVENT, 2 + 50 + 4 + 1 + _POST_HEADER_LENS),
+                     (WRITE_ROWS_EVENT_V2, 10), (UPDATE_ROWS_EVENT_V2, 10),
+                     (DELETE_ROWS_EVENT_V2, 10)):
+        post[etype - 1] = n
     return (
         struct.pack("<H", 4)
         + SERVER_VERSION.ljust(50, b"\x00")
@@ -137,39 +165,39 @@ def _query_body(schema: bytes, query: bytes) -> bytes:
     )
 
 
-def _table_map_body(schema: bytes, table: bytes) -> bytes:
-    """TABLE_MAP: table_id(6) flags(2) schema table; 2 BLOB columns with
-    meta=4 (4-byte length prefixes), nothing nullable."""
+def decode_query_body(body: bytes) -> tuple[str, str]:
+    """(schema, query) of any QUERY event body: after the 13-byte
+    post-header (schema_len at byte 8, status_vars_len at 11-12) comes
+    the status-vars block — empty in this codec's files, always present
+    in a real server's — then schema\\0 and the statement."""
+    schema_len = body[8]
+    start = 13 + struct.unpack_from("<H", body, 11)[0]
+    schema = body[start:start + schema_len].decode()
+    return schema, body[start + schema_len + 1:].decode()
+
+
+def _table_map_body(schema: bytes, table: bytes, n_cols: int) -> bytes:
+    """TABLE_MAP: table_id(6) flags(2) schema table; ``n_cols`` BLOB
+    columns with meta=4 (4-byte length prefixes), nothing nullable."""
     return (
         TABLE_ID.to_bytes(6, "little")
         + struct.pack("<H", 0)
         + bytes([len(schema)]) + schema + b"\x00"
         + bytes([len(table)]) + table + b"\x00"
-        + b"\x02"                 # column count (packed int < 251)
-        + bytes([252, 252])       # MYSQL_TYPE_BLOB x2
-        + b"\x02" + bytes([4, 4])  # metadata: 4-byte blob length prefix
-        + b"\x00"                 # null bitmap: none nullable
+        + bytes([n_cols])                 # column count (packed int < 251)
+        + bytes([252] * n_cols)           # MYSQL_TYPE_BLOB
+        + bytes([n_cols] + [4] * n_cols)  # metadata: 4-byte length prefix
+        + b"\x00"                         # null bitmap: none nullable
     )
 
 
-def _encode_row(key: bytes, value: bytes) -> bytes:
-    return (
-        b"\x00"  # per-row null bitmap (2 cols, none null)
-        + struct.pack("<I", len(key)) + key
-        + struct.pack("<I", len(value)) + value
-    )
-
-
-def _rows_body(rows_payload: bytes, flags: int) -> bytes:
-    """WRITE_ROWS v2: table_id(6) flags(2) extra_len(2)=2, then
-    column_count (packed), columns-present bitmap, row images."""
+def _rows_body(n_cols: int, bitmaps: bytes, payload: bytes, flags: int) -> bytes:
+    """ROWS v2: table_id(6) flags(2) extra_len(2)=2, column count, one
+    columns-present bitmap per image (UPDATE: before + after), images."""
     return (
         TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", flags)
-        + struct.pack("<H", 2)  # extra-data length (none beyond the field)
-        + b"\x02"               # column count
-        + b"\x03"               # columns-present bitmap (both)
-        + rows_payload
+        + struct.pack("<HH", flags, 2)
+        + bytes([n_cols]) + bitmaps + payload
     )
 
 
@@ -177,7 +205,7 @@ def safe_file_component(repo: str) -> str:
     """Injective, filesystem-safe encoding of a repo id for use inside an
     output file name. Git repo ids routinely contain '/' ('org/name'),
     and a hostile value could carry '..' or an absolute prefix — raw
-    interpolation would escape out_dir (round-4 ADVICE, path traversal).
+    interpolation would escape out_dir (path traversal).
     percent-encodes everything outside [A-Za-z0-9._-]; '.' is kept only
     when it cannot form a dot-segment (a leading '.' is encoded)."""
     from urllib.parse import quote
@@ -186,156 +214,227 @@ def safe_file_component(repo: str) -> str:
     return "%2E" + enc[1:] if enc.startswith(".") else enc
 
 
+# -- column definitions and the two layouts ---------------------------------
+
+
+def _no_nul(field: str, s: str) -> str:
+    """NUL delimits the fields packed into one column, so a value that
+    carries one cannot round-trip: refuse it rather than mis-parse it."""
+    if "\x00" in s:
+        raise ValueError(f"binlog export: {field} {s!r} contains a NUL byte")
+    return s
+
+
 def _key_bytes(repo: str, path: str) -> bytes:
-    return repo.encode() + b"\x00" + path.encode()
+    return _no_nul("repo", repo).encode() + b"\x00" + path.encode()
 
 
 def _value_bytes(commit: str, lang: str | None, content: str) -> bytes:
-    lang_part = b"\x00" if lang is None else b"\x01" + lang.encode()
-    return commit.encode() + b"\x00" + lang_part + b"\x00" + content.encode()
+    lang_part = b"\x00" if lang is None else b"\x01" + _no_nul("lang", lang).encode()
+    return (_no_nul("commit", commit).encode() + b"\x00" + lang_part + b"\x00"
+            + content.encode())
 
 
-def row_size_expr(repo, path, commit, lang, content):
-    """The chunking rule's per-row size as a Spark expression — kept next
-    to the byte encoder so the two can never drift (the SQL oracle uses
-    the same arithmetic via octet_length)."""
-    key_len = F.octet_length(repo) + 1 + F.octet_length(path)
-    val_len = (
-        F.octet_length(commit) + 1
-        + F.when(lang.isNull(), F.lit(1)).otherwise(1 + F.octet_length(lang))
-        + 1 + F.octet_length(content)
-    )
-    return F.lit(1 + 4 + 4) + key_len + val_len
+def _decode_key(rec: dict, v: bytes) -> None:
+    repo, path = v.split(b"\x00", 1)
+    rec["repo"], rec["path"] = repo.decode(), path.decode()
 
 
-def build_binlog_file(rows: list[tuple[str, str, str, str | None, str]],
-                      repo: str, xid: int = 1) -> bytes:
-    """Frame one transaction's rows (already path-ordered) as a complete
-    binlog file. Pure function of its inputs — usable driver-side for
-    tests and inside the executor writer."""
+def _decode_value(rec: dict, v: bytes) -> None:
+    commit, rest = v.split(b"\x00", 1)
+    rec["commit"] = commit.decode()
+    if rest[:1] == b"\x00":  # lang-null marker
+        rec["content"] = rest[2:].decode()
+    else:  # \x01 + lang + \x00 + content
+        lang, content = rest[1:].split(b"\x00", 1)
+        rec["lang"], rec["content"] = lang.decode(), content.decode()
+
+
+class _Col(NamedTuple):
+    """One BLOB column: its bytes from (file repo, row tuple), its octet
+    length as a Spark expression over the export DataFrame, and the
+    decoder that writes it back into a parsed record."""
+
+    encode: Callable[[str, tuple], bytes]
+    octets: Callable[[], Column]
+    decode: Callable[[dict, bytes], None]
+
+
+def _key_col(encode: Callable[[str, tuple], bytes]) -> _Col:
+    return _Col(encode, lambda: F.octet_length("repo") + 1 + F.octet_length("path"),
+                _decode_key)
+
+
+def _text_col(i: int, name: str) -> _Col:
+    def decode(rec: dict, v: bytes) -> None:
+        rec[name] = v.decode()
+
+    return _Col(lambda _repo, r: r[i].encode(), lambda: F.octet_length(name), decode)
+
+
+class _Pass(NamedTuple):
+    op: str
+    etype: int
+    images: tuple[tuple[_Col, ...], ...]  # the columns of each row image
+    bitmaps: bytes                        # columns-present bitmap per image
+
+
+class _Layout(NamedTuple):
+    table: bytes
+    n_cols: int
+    passes: tuple[_Pass, ...]
+    order: tuple[str, ...]     # row order inside a file
+    row_cols: tuple[str, ...]  # the framer's row tuple
+    op_of: Callable[[tuple], str]
+    name: Callable             # (pdf, repo, seg, last_seg) -> (file, next, extra)
+    glob: str
+    manifest_schema: T.StructType
+    row_schema: T.StructType
+
+
+def _snapshot_name(pdf, repo, seg, _last_seg):
+    suffix = "" if seg is None else f".{seg:05d}"
+    return f"binlog-{safe_file_component(repo)}{suffix}.log", f"{repo}.next", {}
+
+
+def _netchange_name(pdf, repo, seg, last_seg):
+    start, end = int(pdf["seq"].iloc[0]), int(pdf["seq"].iloc[-1])
+    name = f"{safe_file_component(repo)}/{NETCHANGE_KIND}_{start:010d}_{end:010d}.log"
+    nxt = f"{NETCHANGE_KIND}_{end:010d}" if seg != last_seg else ""
+    return name, nxt, {"start_seq": start, "end_seq": end}
+
+
+# rows are (repo, path, commit, lang, content): snapshot rows carry their repo
+_SNAP_IMAGE = (
+    _key_col(lambda _repo, r: _key_bytes(r[0], r[1])),
+    _Col(lambda _repo, r: _value_bytes(r[2], r[3], r[4]),
+         lambda: (F.octet_length("commit") + 1
+                  + F.when(F.col("lang").isNull(), F.lit(1))
+                  .otherwise(1 + F.octet_length("lang"))
+                  + 1 + F.octet_length("content")),
+         _decode_value),
+)
+SNAPSHOT = _Layout(
+    table=b"files",
+    n_cols=2,
+    passes=(_Pass("I", WRITE_ROWS_EVENT_V2, (_SNAP_IMAGE,), bytes([0b11])),),
+    order=("path",),
+    row_cols=("repo", "path", "commit", "lang", "content"),
+    op_of=lambda _r: "I",
+    name=_snapshot_name,
+    glob="binlog-*.log",
+    manifest_schema=FILE_MANIFEST_SCHEMA,
+    row_schema=PARSED_ROW_SCHEMA,
+)
+
+# rows are (path, diff_op, old_content, new_content, new_commit)
+_NC_KEY = _key_col(lambda repo, r: _key_bytes(repo, r[0]))
+_NC_BEFORE = (_NC_KEY, _text_col(2, "old_content"))
+_NC_AFTER = (_NC_KEY, _text_col(4, "new_commit"), _text_col(3, "new_content"))
+_BM_KEY_CONTENT, _BM_ALL = 0b101, 0b111
+NETCHANGE = _Layout(
+    table=b"changes",
+    n_cols=3,
+    passes=(
+        _Pass("I", WRITE_ROWS_EVENT_V2, (_NC_AFTER,), bytes([_BM_ALL])),
+        _Pass("D", DELETE_ROWS_EVENT_V2, (_NC_BEFORE,), bytes([_BM_KEY_CONTENT])),
+        _Pass("U", UPDATE_ROWS_EVENT_V2, (_NC_BEFORE, _NC_AFTER),
+              bytes([_BM_KEY_CONTENT, _BM_ALL])),
+    ),
+    order=("seq", "path"),
+    row_cols=("path", "diff_op", "old_content", "new_content", "new_commit"),
+    op_of=operator.itemgetter(1),
+    name=_netchange_name,
+    glob=f"{NETCHANGE_KIND}_*",
+    manifest_schema=NETCHANGE_MANIFEST_SCHEMA,
+    row_schema=NETCHANGE_ROW_SCHEMA,
+)
+
+
+# -- the codec: row encoder and its size twins, framer, parser --------------
+
+
+def _encode_row(p: _Pass, repo: str, row: tuple) -> bytes:
+    """One row entry: per image a null-bitmap byte (nothing is null in
+    either layout), then each column as a 4-byte length + its bytes."""
+    out = []
+    for cols in p.images:
+        out.append(b"\x00")
+        for c in cols:
+            v = c.encode(repo, row)
+            out.append(_U32.pack(len(v)))
+            out.append(v)
+    return b"".join(out)
+
+
+def _row_size(p: _Pass, repo: str, row: tuple) -> int:
+    """Python twin of ``_size_expr``: the encoded size of one row entry."""
+    return sum(1 + sum(4 + len(c.encode(repo, row)) for c in cols)
+               for cols in p.images)
+
+
+def _size_expr(layout: _Layout) -> Column:
+    """``_row_size`` as a Spark expression over the export's columns."""
+    def pass_size(p: _Pass) -> Column:
+        return sum(1 + sum(4 + c.octets() for c in cols) for cols in p.images)
+
+    expr = pass_size(layout.passes[-1])
+    for p in reversed(layout.passes[:-1]):
+        expr = F.when(F.col("diff_op") == p.op, pass_size(p)).otherwise(expr)
+    return expr.cast("long")
+
+
+def _frame(layout: _Layout, repo: str, rows: list[tuple], xid: int,
+           next_name: str) -> tuple[bytes, int, dict[str, int]]:
+    """Frame rows (already in file order) as a complete binlog file: FDE,
+    one BEGIN / TABLE_MAP / <=8KB-chunked ROWS / XID transaction per
+    non-empty pass (xids counting up from ``xid``), ROTATE naming
+    ``next_name``. Returns (bytes, rows-event count, rows per op)."""
+    by_op: dict[str, list] = {p.op: [] for p in layout.passes}
+    for r in rows:
+        bucket = by_op.get(layout.op_of(r))
+        if bucket is None:
+            raise ValueError(f"binlog export: unknown diff_op "
+                             f"{layout.op_of(r)!r} for repo {repo!r}")
+        bucket.append(r)
+
     out = bytearray(BINLOG_MAGIC)
-    pos = len(out)
 
-    def emit(etype: int, body: bytes, flags: int = 0) -> None:
-        nonlocal pos
-        ev = _event(etype, body, pos, flags=flags)
-        out.extend(ev)
-        pos += len(ev)
+    def emit(etype: int, body: bytes) -> None:
+        out.extend(_event(etype, body, len(out)))
 
     emit(FORMAT_DESCRIPTION_EVENT, _fde_body())
-    emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
-    emit(TABLE_MAP_EVENT, _table_map_body(repo.encode(), b"files"))
-
-    # accumulate-then-flush-on-overflow chunking (see module docstring):
-    # a row belongs to chunk floor(cum_bytes_before_row / 8192)
-    chunks: list[bytearray] = [bytearray()]
-    cum = 0
-    for r, p, c, lg, ct in rows:
-        enc = _encode_row(_key_bytes(r, p), _value_bytes(c, lg, ct))
-        idx = cum // BUFFER_SIZE
-        while idx >= len(chunks):
-            chunks.append(bytearray())
-        chunks[idx].extend(enc)
-        cum += len(enc)
-
-    for i, ch in enumerate(chunks):
-        flags = STMT_END_F if i == len(chunks) - 1 else 0
-        emit(WRITE_ROWS_EVENT_V2, _rows_body(bytes(ch), flags))
-    emit(XID_EVENT, struct.pack("<Q", xid))
-    emit(ROTATE_EVENT, struct.pack("<Q", pos) + f"{repo}.next".encode())
-    return bytes(out)
-
-
-def write_binlog_files(
-    snapshot: DataFrame, out_dir: str, max_file_bytes: int | None = None
-) -> DataFrame:
-    """Export a (repo, path, commit, lang, content) snapshot / net-change
-    set as binlog files, one per repo (the reference's per-table compacted
-    output, {type}_{start}_{end}.log — common/inter/constant.go:134-136).
-    Files are written by the EXECUTORS (no driver collect); returns the
-    per-file manifest DataFrame.
-
-    ``max_file_bytes`` bounds each writer task's materialized group the
-    same way the net-change exporter does: segment assignment by window
-    cumsum of the row size (``row_size_expr`` — pinned to the byte
-    encoder), writer tasks grouped by (repo, segment) behind an explicit
-    repartition, file names ``binlog-{repo}.{seg:05d}.log``. Without it
-    (the default, and the oracle-checked contract shape) a repo is one
-    transaction in one file — the reference's own per-table shape — and
-    a repo's whole snapshot materializes in one pandas frame, which at
-    lake scale means a hot repo needs the rotation bound.
-    """
-    from pyspark.sql import Window
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("path")
-        repo = pdf["repo"].iloc[0]
-        seg = int(pdf["_seg"].iloc[0]) if "_seg" in pdf.columns else None
-        rows = list(
-            zip(pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
-                pdf["content"])
-        )
-        if any(r[2] is None or r[4] is None for r in rows):
-            raise ValueError(
-                f"binlog export of {repo}: commit/content must be non-null"
-            )
-        blob = build_binlog_file(rows, repo, xid=1 if seg is None else seg + 1)
-        enc_repo = safe_file_component(repo)
-        name = (
-            f"binlog-{enc_repo}.log"
-            if seg is None
-            else f"binlog-{enc_repo}.{seg:05d}.log"
-        )
-        tmp = os.path.join(out_dir, f".{name}.tmp-{os.getpid()}")
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, os.path.join(out_dir, name))
-        sizes = [
-            1 + 4 + 4 + len(_key_bytes(r, p)) + len(_value_bytes(c, lg, ct))
-            for r, p, c, lg, ct in rows
-        ]
+    n_chunks = 0
+    for p in layout.passes:
+        if not by_op[p.op]:
+            continue
+        emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
+        emit(TABLE_MAP_EVENT,
+             _table_map_body(repo.encode(), layout.table, layout.n_cols))
+        # a row belongs to chunk floor(cum_bytes_before_row / 8192)
+        chunks: list[bytearray] = [bytearray()]
         cum = 0
-        n_chunks = 1 if rows else 0
-        for s in sizes:
-            if cum // BUFFER_SIZE + 1 > n_chunks:
-                n_chunks = cum // BUFFER_SIZE + 1
-            cum += s
-        return pd.DataFrame(
-            [{
-                "repo": repo,
-                "file_name": name,
-                "n_rows": len(rows),
-                "n_chunks": n_chunks,
-                "byte_len": len(blob),
-                "file_sha256": hashlib.sha256(blob).hexdigest(),
-            }]
-        )
-
-    df = snapshot.select("repo", "path", "commit", "lang", "content")
-    if max_file_bytes is None:
-        grouped = df.groupBy("repo")
-    else:
-        w = Window.partitionBy("repo").orderBy("path")
-        sz = row_size_expr(
-            F.col("repo"), F.col("path"), F.col("commit"), F.col("lang"),
-            F.col("content"),
-        )
-        cum_before = F.coalesce(
-            F.sum(sz).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        df = df.withColumn(
-            "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
-        )
-        grouped = df.repartition("repo", "_seg").groupBy("repo", "_seg")
-    return grouped.applyInPandas(build, schema=FILE_MANIFEST_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# parser
-# ---------------------------------------------------------------------------
+        for r in by_op[p.op]:
+            try:
+                enc = _encode_row(p, repo, r)
+            except (AttributeError, TypeError):  # a None where bytes belong
+                raise ValueError(
+                    f"binlog export: {p.op} row {r[:2]!r} of repo {repo!r} is "
+                    "missing its required image columns"
+                ) from None
+            idx = cum // BUFFER_SIZE
+            while idx >= len(chunks):
+                chunks.append(bytearray())
+            chunks[idx] += enc
+            cum += len(enc)
+        for i, ch in enumerate(chunks):
+            flags = STMT_END_F if i == len(chunks) - 1 else 0
+            emit(p.etype, _rows_body(layout.n_cols, p.bitmaps, ch, flags))
+        emit(XID_EVENT, struct.pack("<Q", xid))
+        xid += 1
+        n_chunks += len(chunks)
+    emit(ROTATE_EVENT, struct.pack("<Q", len(out)) + next_name.encode())
+    return bytes(out), n_chunks, {op: len(b) for op, b in by_op.items()}
 
 
 def iter_binlog_events(blob: bytes):
@@ -352,15 +451,11 @@ def iter_binlog_events(blob: bytes):
     while pos < len(blob):
         if pos + HEADER_LEN > len(blob):
             raise ValueError(f"truncated event header at byte {pos}")
-        _ts, etype, _sid, size, log_pos, _flags = struct.unpack(
-            "<IBIIIH", blob[pos:pos + HEADER_LEN]
-        )
+        _ts, etype, _sid, size, log_pos, _fl = struct.unpack_from("<IBIIIH", blob, pos)
         if size < HEADER_LEN + 4 or pos + size > len(blob):
             raise ValueError(f"bad event size {size} at byte {pos}")
         if log_pos != pos + size:
-            raise ValueError(
-                f"log_pos {log_pos} != end position {pos + size} at {pos}"
-            )
+            raise ValueError(f"log_pos {log_pos} != end position {pos + size} at {pos}")
         raw = blob[pos:pos + size]
         body = raw[HEADER_LEN:-4]
         (crc,) = struct.unpack("<I", raw[-4:])
@@ -370,54 +465,47 @@ def iter_binlog_events(blob: bytes):
         pos += size
 
 
-def parse_binlog_bytes(blob: bytes) -> list[dict]:
-    """Decode one binlog file -> row dicts (repo, path, commit, lang,
-    content, chunk_idx, xid). Verifies the magic, every event's CRC32 and
-    size bookkeeping, and the chunk flag protocol; malformed input fails
-    loudly (never returns partial rows silently)."""
+def _parse(layout: _Layout, blob: bytes) -> list[dict]:
+    """Decode one file into ``layout.row_schema`` dicts. Beyond the event
+    walk's checks, verifies each rows event's column count and bitmaps
+    against the layout and the STMT_END/XID protocol; malformed input
+    fails loudly. The chunk index restarts with every transaction."""
+    passes = {p.etype: p for p in layout.passes}
+    blanks = {}
+    for p in layout.passes:
+        blanks[p.etype] = dict.fromkeys(layout.row_schema.fieldNames())
+        if "diff_op" in blanks[p.etype]:
+            blanks[p.etype]["diff_op"] = p.op
     rows: list[dict] = []
     pending: list[dict] = []
     chunk_idx = 0
     saw_fde = saw_stmt_end = False
-    xid = None
     for etype, _raw, body, pos in iter_binlog_events(blob):
         if etype == FORMAT_DESCRIPTION_EVENT:
             if struct.unpack("<H", body[:2])[0] != 4:
                 raise ValueError("unsupported binlog version")
             saw_fde = True
-        elif etype == WRITE_ROWS_EVENT_V2:
+        elif etype in passes:
             if not saw_fde:
                 raise ValueError("rows event before FORMAT_DESCRIPTION")
-            off = 6 + 2 + 2 + 1 + 1  # table_id, flags, extra, ncols, bitmap
-            rflags = struct.unpack("<H", body[6:8])[0]
+            p = passes[etype]
+            off = 11 + len(p.bitmaps)  # table_id, flags, extra, ncols, bitmaps
+            if body[10] != layout.n_cols or body[11:off] != p.bitmaps:
+                raise ValueError(f"rows event at byte {pos} does not match "
+                                 f"the {layout.table.decode()!r} layout")
+            base = {**blanks[etype], "chunk_idx": chunk_idx, "xid": -1}
             while off < len(body):
-                off += 1  # null bitmap byte
-                (klen,) = struct.unpack("<I", body[off:off + 4])
-                key = body[off + 4:off + 4 + klen]
-                off += 4 + klen
-                (vlen,) = struct.unpack("<I", body[off:off + 4])
-                val = body[off + 4:off + 4 + vlen]
-                off += 4 + vlen
-                repo_b, path_b = key.split(b"\x00", 1)
-                commit_b, rest = val.split(b"\x00", 1)
-                if rest[:1] == b"\x00":  # lang-null marker
-                    lang, content_b = None, rest[2:]
-                else:  # \x01 + lang + \x00 + content
-                    lang_b, content_b = rest[1:].split(b"\x00", 1)
-                    lang = lang_b.decode()
-                pending.append(
-                    {
-                        "repo": repo_b.decode(),
-                        "path": path_b.decode(),
-                        "commit": commit_b.decode(),
-                        "lang": lang,
-                        "content": content_b.decode(),
-                        "chunk_idx": chunk_idx,
-                        "xid": -1,
-                    }
-                )
+                rec = base.copy()
+                for cols in p.images:
+                    off += 1  # null-bitmap byte
+                    for c in cols:
+                        (ln,) = _U32.unpack_from(body, off)
+                        off += 4
+                        c.decode(rec, body[off:off + ln])
+                        off += ln
+                pending.append(rec)
             chunk_idx += 1
-            if rflags & STMT_END_F:
+            if body[6] & STMT_END_F:
                 saw_stmt_end = True
         elif etype == XID_EVENT:
             if not saw_stmt_end and pending:
@@ -427,271 +515,153 @@ def parse_binlog_bytes(blob: bytes) -> list[dict]:
                 r["xid"] = xid
             rows.extend(pending)
             pending = []
+            chunk_idx = 0
+            saw_stmt_end = False
     if pending:
         raise ValueError("rows chunks with no committing XID event")
     return rows
 
 
-def read_binlog_files(spark, path: str) -> DataFrame:
-    """Distributed parse of a binlog-file directory back into rows — the
-    roundtrip proof that the framing is real (decode own output ->
-    collapse -> equals the snapshot it was built from)."""
-    # pathGlobFilter (not a glob IN the path): loading a glob path makes
+# -- distributed writer and reader ------------------------------------------
+
+
+def _write(layout: _Layout, df: DataFrame, out_dir: str,
+           max_file_bytes: int | None, compress: bool) -> DataFrame:
+    """Executor-side export: one file per (repo[, segment]) group, written
+    as tmp + ``os.replace``; returns the per-file manifest."""
+    os.makedirs(out_dir, exist_ok=True)
+    rotated = max_file_bytes is not None
+    manifest_cols = layout.manifest_schema.fieldNames()
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(list(layout.order))
+        # Arrow->pandas can surface SQL NULLs as NaN; normalize to None so
+        # the framer's image checks see real nulls
+        pdf = pdf.astype(object).where(pd.notnull(pdf), None)
+        repo = pdf["repo"].iloc[0]
+        seg = last_seg = None
+        if rotated:
+            seg, last_seg = int(pdf["_seg"].iloc[0]), int(pdf["_max_seg"].iloc[0])
+        rows = list(zip(*(pdf[c] for c in layout.row_cols)))
+        name, nxt, extra = layout.name(pdf, repo, seg, last_seg)
+        blob, n_chunks, counts = _frame(
+            layout, repo, rows, len(layout.passes) * (seg or 0) + 1, nxt
+        )
+        if compress:
+            blob = zlib.compress(blob, 6)
+            name += ".z"
+        dest = os.path.join(out_dir, name)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        tmp = os.path.join(os.path.dirname(dest),
+                           f".{os.path.basename(dest)}.tmp-{os.getpid()}")
+        with open(tmp, "wb") as f:
+            f.write(blob)
+        os.replace(tmp, dest)
+        return pd.DataFrame([{
+            "repo": repo, "file_name": name, "n_rows": len(rows),
+            "n_chunks": n_chunks, "n_inserts": counts.get("I", 0),
+            "n_deletes": counts.get("D", 0), "n_updates": counts.get("U", 0),
+            "byte_len": len(blob), "compressed": compress,
+            "file_sha256": hashlib.sha256(blob).hexdigest(), **extra,
+        }], columns=manifest_cols)
+
+    df = df.select(*dict.fromkeys(("repo", *layout.order, *layout.row_cols)))
+    if not rotated:
+        grouped = df.groupBy("repo")
+    else:
+        by_repo = Window.partitionBy("repo")
+        cum_before = F.coalesce(F.sum(_size_expr(layout)).over(
+            by_repo.orderBy(*layout.order).rowsBetween(Window.unboundedPreceding, -1)
+        ), F.lit(0))
+        df = df.withColumn(
+            "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
+        ).withColumn("_max_seg", F.max("_seg").over(by_repo))
+        # the window's repo-only partitioning already satisfies the groupBy
+        # (subset rule) and would serialize a hot repo's segments through
+        # one task: this second exchange buys cross-executor parallelism
+        grouped = df.repartition("repo", "_seg").groupBy("repo", "_seg")
+    return grouped.applyInPandas(build, schema=layout.manifest_schema)
+
+
+def _read(layout: _Layout, spark, path: str) -> DataFrame:
+    """Distributed parse of an export tree (rotated segments, ``.z`` zlib
+    files and ``.tar`` consolidation archives) back into rows."""
+    # pathGlobFilter, not a glob IN the path: loading a glob path makes
     # Spark's FileStreamSink.hasMetadata stat the glob string as a literal
-    # file, which logs a benign-but-alarming FileNotFoundException stack
-    # at WARN on every read (the unexplained trace in round-4's bench
-    # tail). Stat'ing the real directory keeps the probe silent.
+    # file and log a FileNotFoundException stack at WARN on every read
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "binlog-*.log")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", layout.glob)
         .load(path)
-        .select("content")
+        .select("path", "content")
     )
+    cols = layout.row_schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PARSED_ROW_SCHEMA.fields]
         for pdf in batches:
             recs: list[dict] = []
-            for blob in pdf["content"]:
-                recs.extend(parse_binlog_bytes(bytes(blob)))
+            for name, blob in zip(pdf["path"], pdf["content"]):
+                if name.endswith(".tar"):
+                    with tarfile.open(fileobj=io.BytesIO(blob)) as tf:
+                        for member in tf.getmembers():
+                            if member.isfile():
+                                recs.extend(_parse(
+                                    layout, tf.extractfile(member).read()))
+                else:
+                    recs.extend(_parse(layout, bytes(blob)))
             yield (
                 pd.DataFrame(recs, columns=cols)
                 if recs
                 else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
             )
 
-    return files.mapInPandas(run, schema=PARSED_ROW_SCHEMA)
+    return files.mapInPandas(run, schema=layout.row_schema)
 
 
-# ---------------------------------------------------------------------------
-# NET-CHANGE export: DELETE_ROWS / UPDATE_ROWS v2 framing of diff() output
-# ---------------------------------------------------------------------------
-#
-# The snapshot export above frames inserts only. The reference's restitute
-# path writes the NET-CHANGE stream in three per-op-type passes — all
-# WriteRows, then all DeleteRows, then all UpdateRows, each pass under its
-# own TABLE_MAP so the map event is not repeated per row
-# (backup/binlog/repl.go:770-800 `dumpBinlog`/`have`) — into files named
-# {type}_{start:010d}_{end:010d}.log (common/inter/constant.go:82,134-136),
-# optionally zlib-compressed whole-stream (common/client/cfs.go:62-68), and
-# later folded into rolling {type}_{start}_{end}.tar consolidation archives
-# (cfs.go:84-171). This section is the byte-level analog over
-# ``LakeTable.diff(..., keep_lineage=True)`` output; start/end are SEQ
-# bounds (the engine's GTID-like monotone sequence — the reference uses
-# flush timestamps, its per-granularity analog of the same monotone axis).
-#
-# Net-change table layout (one TABLE_MAP per pass): THREE blob columns
-# ``(key, commit, content)``, meta=4. Row images use minimal
-# columns-present bitmaps, exactly binlog-v2's partial-row-image protocol:
-#
-#   WRITE_ROWS  (I): after image,  bitmap 0b111  -> key, new_commit, new_content
-#   DELETE_ROWS (D): before image, bitmap 0b101  -> key, old_content
-#   UPDATE_ROWS (U): before 0b101 (key, old_content)
-#                    + after 0b111 (key, new_commit, new_content)
-#
-# so a parse of the engine's own export reconstructs the full diff row set
-# including old images — the roundtrip contract query shares the
-# cdc_version_diff oracle verbatim.
-
-NETCHANGE_KIND = "chg"
-_BM_KEY_CONTENT = 0b101  # key + content present
-_BM_ALL = 0b111          # key + commit + content
-
-NETCHANGE_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_inserts", T.LongType(), False),
-        T.StructField("n_deletes", T.LongType(), False),
-        T.StructField("n_updates", T.LongType(), False),
-        T.StructField("start_seq", T.LongType(), False),
-        T.StructField("end_seq", T.LongType(), False),
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("compressed", T.BooleanType(), False),
-        T.StructField("file_sha256", T.StringType(), False),
-    ]
-)
-
-NETCHANGE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("diff_op", T.StringType(), False),
-        T.StructField("old_content", T.StringType(), True),
-        T.StructField("new_content", T.StringType(), True),
-        T.StructField("new_commit", T.StringType(), True),
-        T.StructField("chunk_idx", T.LongType(), False),
-        T.StructField("xid", T.LongType(), False),
-    ]
-)
-
-#: pass order mirrors the reference's dumpBinlog: inserts, deletes, updates
-_NC_PASSES = (
-    ("I", WRITE_ROWS_EVENT_V2),
-    ("D", DELETE_ROWS_EVENT_V2),
-    ("U", UPDATE_ROWS_EVENT_V2),
-)
+# -- public API -------------------------------------------------------------
 
 
-def _nc_table_map_body(schema: bytes, table: bytes) -> bytes:
-    """TABLE_MAP for the 3-column net-change layout (key, commit,
-    content) — BLOBs with 4-byte length prefixes, nothing nullable."""
-    return (
-        TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", 0)
-        + bytes([len(schema)]) + schema + b"\x00"
-        + bytes([len(table)]) + table + b"\x00"
-        + b"\x03"                    # column count
-        + bytes([252, 252, 252])     # MYSQL_TYPE_BLOB x3
-        + b"\x03" + bytes([4, 4, 4])  # metadata: 4-byte blob length prefix
-        + b"\x00"                    # null bitmap: none nullable
-    )
-
-
-def _nc_image(bitmap: int, key: bytes, commit: bytes | None,
-              content: bytes) -> bytes:
-    """One row image under a columns-present bitmap. The per-image null
-    bitmap covers present columns only (all non-null here -> 0x00)."""
-    out = bytearray(b"\x00")
-    for bit, val in ((1, key), (2, commit), (4, content)):
-        if bitmap & bit:
-            assert val is not None
-            out.extend(struct.pack("<I", len(val)) + val)
-    return bytes(out)
-
-
-def _nc_encode_row(op: str, key: bytes, old_content: str | None,
-                   new_content: str | None, new_commit: str | None) -> bytes:
-    if op == "I":
-        return _nc_image(_BM_ALL, key, new_commit.encode(), new_content.encode())
-    if op == "D":
-        return _nc_image(_BM_KEY_CONTENT, key, None, old_content.encode())
-    return _nc_image(_BM_KEY_CONTENT, key, None, old_content.encode()) + _nc_image(
-        _BM_ALL, key, new_commit.encode(), new_content.encode()
-    )
-
-
-def _nc_rows_body(etype: int, rows_payload: bytes, flags: int) -> bytes:
-    """ROWS v2 body for the net-change layout; UPDATE carries the second
-    (after-image) columns-present bitmap."""
-    head = (
-        TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", flags)
-        + struct.pack("<H", 2)
-        + b"\x03"
-    )
-    if etype == WRITE_ROWS_EVENT_V2:
-        head += bytes([_BM_ALL])
-    elif etype == DELETE_ROWS_EVENT_V2:
-        head += bytes([_BM_KEY_CONTENT])
-    else:
-        head += bytes([_BM_KEY_CONTENT, _BM_ALL])
-    return head + rows_payload
-
-
-def _nc_validate(op: str, old_content, new_content, new_commit,
-                 repo: str, path: str) -> None:
-    need = {
-        "I": (new_content is not None and new_commit is not None),
-        "D": (old_content is not None),
-        "U": (
-            old_content is not None
-            and new_content is not None
-            and new_commit is not None
-        ),
-    }.get(op)
-    if need is None:
-        raise ValueError(f"netchange export: unknown diff_op {op!r} for "
-                         f"({repo!r}, {path!r})")
-    if not need:
-        raise ValueError(
-            f"netchange export: {op} row for ({repo!r}, {path!r}) is "
-            "missing its required image columns"
-        )
+def build_binlog_file(rows: list[tuple[str, str, str, str | None, str]],
+                      repo: str, xid: int = 1) -> bytes:
+    """Frame one transaction's (repo, path, commit, lang, content) rows,
+    already path-ordered, as a complete snapshot binlog file."""
+    return _frame(SNAPSHOT, repo, rows, xid, f"{repo}.next")[0]
 
 
 def build_netchange_file(
-    rows: list[tuple[str, str, str, str | None, str | None, str | None]],
+    rows: list[tuple[str, str, str | None, str | None, str | None]],
     repo: str,
     start_xid: int = 1,
     next_name: str = "",
 ) -> bytes:
-    """Frame one rotation segment's net-change rows as a complete binlog
-    file: magic, FDE, then one BEGIN / TABLE_MAP / <=8KB-chunked rows
-    events / XID transaction PER op-type pass present (I, D, U — the
-    reference's three-pass restitute), ROTATE trailer naming the next
-    segment. ``rows`` = (path, op, old_content, new_content, new_commit)
-    tuples, already (seq, path)-ordered. Pure function of its inputs."""
-    out = bytearray(BINLOG_MAGIC)
-    pos = len(out)
-
-    def emit(etype: int, body: bytes, flags: int = 0) -> None:
-        nonlocal pos
-        ev = _event(etype, body, pos, flags=flags)
-        out.extend(ev)
-        pos += len(ev)
-
-    emit(FORMAT_DESCRIPTION_EVENT, _fde_body())
-    known = {op for op, _ in _NC_PASSES}
-    stray = sorted({r[1] for r in rows} - known)
-    if stray:
-        raise ValueError(
-            f"netchange export: unknown diff_op {stray[0]!r} for repo {repo!r}"
-        )
-    xid = start_xid
-    for op, etype in _NC_PASSES:
-        pass_rows = [r for r in rows if r[1] == op]
-        if not pass_rows:
-            continue
-        emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
-        emit(TABLE_MAP_EVENT, _nc_table_map_body(repo.encode(), b"changes"))
-        chunks: list[bytearray] = [bytearray()]
-        cum = 0
-        for path, _op, old_c, new_c, new_cm in pass_rows:
-            _nc_validate(op, old_c, new_c, new_cm, repo, path)
-            enc = _nc_encode_row(op, _key_bytes(repo, path), old_c, new_c, new_cm)
-            idx = cum // BUFFER_SIZE
-            while idx >= len(chunks):
-                chunks.append(bytearray())
-            chunks[idx].extend(enc)
-            cum += len(enc)
-        for i, ch in enumerate(chunks):
-            flags = STMT_END_F if i == len(chunks) - 1 else 0
-            emit(etype, _nc_rows_body(etype, bytes(ch), flags))
-        emit(XID_EVENT, struct.pack("<Q", xid))
-        xid += 1
-    emit(ROTATE_EVENT, struct.pack("<Q", pos) + next_name.encode())
-    return bytes(out)
+    """Frame (path, op, old_content, new_content, new_commit) rows,
+    already (seq, path)-ordered, as a complete net-change binlog file:
+    one transaction per op pass present, xids from ``start_xid``, ROTATE
+    naming ``next_name``."""
+    return _frame(NETCHANGE, repo, rows, start_xid, next_name)[0]
 
 
-def _nc_row_size(op: str, key: bytes, old_c, new_c, new_cm) -> int:
-    """Encoded byte size of one row entry (U = before + after images) —
-    used by the rotation planner without materializing the bytes twice."""
-    img = lambda *vals: 1 + sum(4 + len(v) for v in vals)  # noqa: E731
-    if op == "I":
-        return img(key, new_cm.encode(), new_c.encode())
-    if op == "D":
-        return img(key, old_c.encode())
-    return img(key, old_c.encode()) + img(key, new_cm.encode(), new_c.encode())
+def parse_binlog_bytes(blob: bytes) -> list[dict]:
+    """One snapshot binlog file -> row dicts (``PARSED_ROW_SCHEMA``)."""
+    return _parse(SNAPSHOT, blob)
 
 
-def nc_row_size_expr():
-    """``_nc_row_size`` as a Spark expression over the diff columns —
-    kept next to the byte encoder so the two can never drift (a parity
-    test pins them). Drives the DISTRIBUTED rotation assignment: segment
-    = floor(cum_bytes_before_row / max_file_bytes) via a window cumsum,
-    the same accumulate rule as the 8KB chunks."""
-    key_len = F.octet_length("repo") + 1 + F.octet_length("path")
-    img = lambda *lens: 1 + sum(4 + ln for ln in lens)  # noqa: E731
-    after = img(key_len, F.octet_length("new_commit"),
-                F.octet_length("new_content"))
-    before = img(key_len, F.octet_length("old_content"))
-    return (
-        F.when(F.col("diff_op") == "I", after)
-        .when(F.col("diff_op") == "D", before)
-        .otherwise(before + after)
-    ).cast("long")
+def parse_netchange_bytes(blob: bytes) -> list[dict]:
+    """One net-change binlog file, plain or zlib -> row dicts
+    (``NETCHANGE_ROW_SCHEMA``)."""
+    return _parse(NETCHANGE, blob)
+
+
+def write_binlog_files(
+    snapshot: DataFrame, out_dir: str, max_file_bytes: int | None = None
+) -> DataFrame:
+    """Export a (repo, path, commit, lang, content) snapshot as binlog
+    files in ``out_dir``, one per repo (the reference's per-table
+    compacted output) or per ``max_file_bytes`` segment; returns the
+    ``FILE_MANIFEST_SCHEMA`` manifest. Without rotation (the
+    oracle-checked shape) a hot repo materializes in one pandas frame."""
+    return _write(SNAPSHOT, snapshot, out_dir, max_file_bytes, False)
 
 
 def write_netchange_binlog_files(
@@ -701,254 +671,41 @@ def write_netchange_binlog_files(
     compress: bool = False,
 ) -> DataFrame:
     """Export a net-change set (``LakeTable.diff(v0, v1,
-    keep_lineage=True)`` — columns repo, path, diff_op, seq, old_content,
-    new_content, new_commit) as binlog files under
-    ``out_dir/<repo>/chg_{start}_{end}.log[.z]``:
-
-    - per-repo output directory (encoded via ``safe_file_component``);
-    - size-based ROTATION, assigned DISTRIBUTED: a window cumsum of the
-      encoded row size over (seq, path) order puts each row in segment
-      ``floor(cum_bytes_before_row / max_file_bytes)`` — the same
-      accumulate rule as the 8KB chunks (a segment may overshoot by at
-      most one row) — and the writer tasks group by (repo, segment).
-      This bounds EVERY writer task's materialized group to
-      ~max_file_bytes and spreads a hot repo's segments across the
-      cluster: the one-task-per-repo shape would buffer a
-      90%-of-the-changefeed repo in a single executor's pandas frame.
-      (The window sort itself spills through Spark's sorter; it is the
-      pandas group materialization that must stay bounded.) Each segment
-      is a complete self-describing binlog file whose ROTATE event names
-      the next segment's prefix (the reference's NextPrefix,
-      common/inter/constant.go:137-139). ``max_file_bytes=None`` keeps
-      one file (one group) per repo.
-    - optional whole-stream zlib (``.log.z`` — common/client/cfs.go:62-68).
-
-    Files are written ON THE EXECUTORS; the return value is the small
-    per-file manifest with start/end seqs.
-    """
-    from pyspark.sql import Window
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["seq", "path"])
-        # Arrow->pandas can surface SQL NULLs as NaN; normalize to None so
-        # the per-op image validation sees real nulls
-        pdf = pdf.astype(object).where(pd.notnull(pdf), None)
-        repo = pdf["repo"].iloc[0]
-        seg = int(pdf["_seg"].iloc[0])
-        last_seg = int(pdf["_max_seg"].iloc[0])
-        rows = list(
-            zip(pdf["path"], pdf["diff_op"], pdf["old_content"],
-                pdf["new_content"], pdf["new_commit"])
-        )
-        start, end = int(pdf["seq"].iloc[0]), int(pdf["seq"].iloc[-1])
-        nxt = f"{NETCHANGE_KIND}_{end:010d}" if seg < last_seg else ""
-        blob = build_netchange_file(
-            rows, repo, start_xid=3 * seg + 1, next_name=nxt
-        )
-        name = f"{NETCHANGE_KIND}_{start:010d}_{end:010d}.log"
-        if compress:
-            blob = zlib.compress(blob, 6)
-            name += ".z"
-        rdir = os.path.join(out_dir, safe_file_component(repo))
-        os.makedirs(rdir, exist_ok=True)
-        tmp = os.path.join(rdir, f".{name}.tmp-{os.getpid()}")
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, os.path.join(rdir, name))
-        ops = [r[1] for r in rows]
-        return pd.DataFrame(
-            [{
-                "repo": repo,
-                "file_name": f"{safe_file_component(repo)}/{name}",
-                "n_rows": len(rows),
-                "n_inserts": ops.count("I"),
-                "n_deletes": ops.count("D"),
-                "n_updates": ops.count("U"),
-                "start_seq": start,
-                "end_seq": end,
-                "byte_len": len(blob),
-                "compressed": compress,
-                "file_sha256": hashlib.sha256(blob).hexdigest(),
-            }],
-            columns=[f.name for f in NETCHANGE_MANIFEST_SCHEMA.fields],
-        )
-
-    cols = ["repo", "path", "diff_op", "seq", "old_content", "new_content",
-            "new_commit"]
-    df = changes.select(*cols)
-    if max_file_bytes is None:
-        df = df.withColumn("_seg", F.lit(0)).withColumn("_max_seg", F.lit(0))
-        grouped = df.groupBy("repo")
-    else:
-        w = Window.partitionBy("repo").orderBy("seq", "path")
-        cum_before = F.coalesce(
-            F.sum(nc_row_size_expr()).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        df = df.withColumn(
-            "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
-        ).withColumn("_max_seg", F.max("_seg").over(Window.partitionBy("repo")))
-        # explicit (repo, seg) repartition: the groupBy's requirement is
-        # already satisfied by the window's repo-only partitioning (subset
-        # rule), which would keep ALL of a hot repo's segments serialized
-        # through one task — the second exchange is deliberate, it buys
-        # cross-executor parallelism for the dominant repo's segments
-        grouped = df.repartition("repo", "_seg").groupBy("repo", "_seg")
-    return grouped.applyInPandas(build, schema=NETCHANGE_MANIFEST_SCHEMA)
+    keep_lineage=True)``: repo, path, diff_op, seq, old_content,
+    new_content, new_commit) as ``out_dir/<repo>/chg_{start}_{end}.log``
+    files, rotated by ``max_file_bytes`` (each segment's ROTATE names the
+    next one's prefix, the reference's NextPrefix,
+    common/inter/constant.go:137-139) and optionally zlib'd (``.log.z``).
+    Returns the ``NETCHANGE_MANIFEST_SCHEMA`` manifest."""
+    return _write(NETCHANGE, changes, out_dir, max_file_bytes, compress)
 
 
-def parse_netchange_bytes(blob: bytes) -> list[dict]:
-    """Decode one net-change binlog file -> row dicts (repo, path,
-    diff_op, old_content, new_content, new_commit, chunk_idx, xid).
-    Accepts whole-stream zlib transparently. Verifies magic, sizes,
-    every CRC32, and the per-pass BEGIN/TABLE_MAP/rows/XID protocol;
-    malformed input fails loudly."""
-    rows: list[dict] = []
-    pending: list[dict] = []
-    chunk_idx = 0
-    saw_fde = saw_stmt_end = False
-    op_of = {WRITE_ROWS_EVENT_V2: "I", DELETE_ROWS_EVENT_V2: "D",
-             UPDATE_ROWS_EVENT_V2: "U"}
-
-    def _read_image(body: bytes, off: int, bitmap: int):
-        off += 1  # null bitmap byte (nothing null in this layout)
-        vals: dict[int, bytes] = {}
-        for bit in (1, 2, 4):
-            if bitmap & bit:
-                (ln,) = struct.unpack("<I", body[off:off + 4])
-                vals[bit] = body[off + 4:off + 4 + ln]
-                off += 4 + ln
-        return vals, off
-
-    for etype, _raw, body, pos in iter_binlog_events(blob):
-        if etype == FORMAT_DESCRIPTION_EVENT:
-            if struct.unpack("<H", body[:2])[0] != 4:
-                raise ValueError("unsupported binlog version")
-            saw_fde = True
-        elif etype in op_of:
-            if not saw_fde:
-                raise ValueError("rows event before FORMAT_DESCRIPTION")
-            op = op_of[etype]
-            rflags = struct.unpack("<H", body[6:8])[0]
-            off = 6 + 2 + 2 + 1  # table_id, flags, extra, ncols
-            bm1 = body[off]
-            off += 1
-            bm2 = None
-            if etype == UPDATE_ROWS_EVENT_V2:
-                bm2 = body[off]
-                off += 1
-            while off < len(body):
-                before, off = _read_image(body, off, bm1)
-                after = None
-                if bm2 is not None:
-                    after, off = _read_image(body, off, bm2)
-                img = after if after is not None else before
-                repo_b, path_b = img[1].split(b"\x00", 1)
-                rec = {
-                    "repo": repo_b.decode(),
-                    "path": path_b.decode(),
-                    "diff_op": op,
-                    "old_content": None,
-                    "new_content": None,
-                    "new_commit": None,
-                    "chunk_idx": chunk_idx,
-                    "xid": -1,
-                }
-                if op == "I":
-                    rec["new_commit"] = before[2].decode()
-                    rec["new_content"] = before[4].decode()
-                elif op == "D":
-                    rec["old_content"] = before[4].decode()
-                else:
-                    rec["old_content"] = before[4].decode()
-                    rec["new_commit"] = after[2].decode()
-                    rec["new_content"] = after[4].decode()
-                pending.append(rec)
-            chunk_idx += 1
-            if rflags & STMT_END_F:
-                saw_stmt_end = True
-        elif etype == XID_EVENT:
-            if not saw_stmt_end and pending:
-                raise ValueError("XID before the STMT_END rows chunk")
-            (xid,) = struct.unpack("<Q", body[:8])
-            for r in pending:
-                r["xid"] = xid
-            rows.extend(pending)
-            pending = []
-            chunk_idx = 0  # chunk index restarts per transaction/pass
-            saw_stmt_end = False
-    if pending:
-        raise ValueError("rows chunks with no committing XID event")
-    return rows
+def read_binlog_files(spark, path: str) -> DataFrame:
+    """Distributed parse of a snapshot export directory back into rows."""
+    return _read(SNAPSHOT, spark, path)
 
 
 def read_netchange_binlog_files(spark, out_dir: str) -> DataFrame:
-    """Distributed parse of a net-change export tree (including rotated
-    segments, ``.z`` zlib files and ``.tar`` consolidation archives) back
-    into diff rows — the roundtrip proof for the D/U framing."""
-    import io as _io
-    import tarfile
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", f"{NETCHANGE_KIND}_*")
-        .load(out_dir)
-        .select("path", "content")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in NETCHANGE_ROW_SCHEMA.fields]
-        for pdf in batches:
-            recs: list[dict] = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                blob = bytes(blob)
-                if path.endswith(".tar"):
-                    with tarfile.open(fileobj=_io.BytesIO(blob)) as tf:
-                        for member in tf.getmembers():
-                            if not member.isfile():
-                                continue
-                            recs.extend(
-                                parse_netchange_bytes(tf.extractfile(member).read())
-                            )
-                else:
-                    recs.extend(parse_netchange_bytes(blob))
-            yield (
-                pd.DataFrame(recs, columns=cols)
-                if recs
-                else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            )
-
-    return files.mapInPandas(run, schema=NETCHANGE_ROW_SCHEMA)
+    """Distributed parse of a net-change export tree back into diff rows,
+    old images included."""
+    return _read(NETCHANGE, spark, out_dir)
 
 
 def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
     """Fold each repo's rotated segment files into ONE rolling
     ``chg_{min}_{max}.tar`` archive and remove the originals — the
-    reference's per-day tar consolidation (common/client/cfs.go:84-171,
-    DstTarFileName constant.go:141-143): many small rotation segments
-    become one sequentially-readable archive while staying parseable
-    (``read_netchange_binlog_files`` opens tar members transparently).
-
-    Runs one applyInPandas task per repo directory (the tar fold is
-    file-level work, done where the files live — assumes out_dir is
-    shared storage, the same assumption the writer's ``open()`` makes).
-    Tar members are written with zeroed metadata so archive bytes are a
-    pure function of the member contents. Returns the per-archive
+    reference's tar consolidation (common/client/cfs.go:84-171,
+    DstTarFileName constant.go:141-143); ``read_netchange_binlog_files``
+    opens tar members transparently. One applyInPandas task per repo
+    directory, done where the files live (out_dir is shared storage, as
+    the writer assumes). Members carry zeroed metadata, so archive bytes
+    are a pure function of the members. Returns the per-archive
     manifest."""
-    import tarfile
-
-    dirs = sorted(
-        d for d in os.listdir(out_dir)
-        if os.path.isdir(os.path.join(out_dir, d))
-    )
+    dirs = sorted(d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d)))
+    schema = "repo_dir string, tar_name string, n_members long, byte_len long"
     if not dirs:
-        return spark.createDataFrame([], "repo_dir string, tar_name string, "
-                                         "n_members long, byte_len long")
+        return spark.createDataFrame([], schema)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         d = pdf["repo_dir"].iloc[0]
@@ -959,15 +716,12 @@ def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
             and not n.endswith(".tar")
         )
         if not names:
-            return pd.DataFrame(
-                columns=["repo_dir", "tar_name", "n_members", "byte_len"]
-            )
+            return pd.DataFrame(columns=["repo_dir", "tar_name", "n_members",
+                                         "byte_len"])
         seqs = [int(n.split("_")[1]) for n in names] + [
             int(n.split("_")[2].split(".")[0]) for n in names
         ]
-        tar_name = (
-            f"{NETCHANGE_KIND}_{min(seqs):010d}_{max(seqs):010d}.tar"
-        )
+        tar_name = f"{NETCHANGE_KIND}_{min(seqs):010d}_{max(seqs):010d}.tar"
         tmp = os.path.join(rdir, f".{tar_name}.tmp-{os.getpid()}")
         with tarfile.open(tmp, "w") as tf:
             for n in names:
@@ -976,23 +730,14 @@ def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
                 info = tarfile.TarInfo(name=n)
                 info.size = len(data)
                 info.mtime = 0  # deterministic archive bytes
-                import io as _io
-
-                tf.addfile(info, _io.BytesIO(data))
+                tf.addfile(info, io.BytesIO(data))
         os.replace(tmp, os.path.join(rdir, tar_name))
         for n in names:
             os.remove(os.path.join(rdir, n))
-        return pd.DataFrame(
-            [{
-                "repo_dir": d,
-                "tar_name": tar_name,
-                "n_members": len(names),
-                "byte_len": os.path.getsize(os.path.join(rdir, tar_name)),
-            }]
-        )
+        return pd.DataFrame([{
+            "repo_dir": d, "tar_name": tar_name, "n_members": len(names),
+            "byte_len": os.path.getsize(os.path.join(rdir, tar_name)),
+        }])
 
     listing = spark.createDataFrame([(d,) for d in dirs], "repo_dir string")
-    return listing.groupBy("repo_dir").applyInPandas(
-        fold, schema="repo_dir string, tar_name string, n_members long, "
-                     "byte_len long"
-    )
+    return listing.groupBy("repo_dir").applyInPandas(fold, schema=schema)

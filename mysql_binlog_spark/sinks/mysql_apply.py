@@ -7,23 +7,28 @@ base64'd and applied as its own committed ``BINLOG`` statement (it
 installs the format for the session); a QUERY ``BEGIN`` opens the
 transaction and XID commits it; TABLE_MAP starts a statement buffer that
 accumulates the base64 of every rows-event chunk until the STMT_END
-flag, growing ``max_allowed_packet`` by doubling when the buffered
-statement would exceed it (resume.go:688-693, common/db/mysql.go:333-359
-MetaConf Begin/Execute/Commit); DDL QUERY events run ``use <schema>``
-then the statement in their own transaction; ROLLBACK/SAVEPOINT are
-elided.
+flag (resume.go:688-693, common/db/mysql.go:333-359 MetaConf
+Begin/Execute/Commit); DDL QUERY events run ``use <schema>`` then the
+statement in their own transaction; ROLLBACK/SAVEPOINT are elided. A
+buffered statement larger than ``max_allowed_packet`` doubles it the way
+resetMaxPkgSize does (resume.go:772-800): ``SET GLOBAL``, reconnect (a
+session's value is fixed at connect time), re-apply the FDE as its own
+committed statement, re-open the transaction and replay what it had
+executed, then run the statement.
 
-This module is that executor over the engine's OWN export files
-(``write_binlog_files`` snapshots and ``write_netchange_binlog_files``
-net-change streams — both genuine binlog-v4, so the walk is the shared
-validated ``iter_binlog_events``). No MySQL server exists in this
-environment, so the seam is a DB-API connection factory: production
-passes ``mysql.connector.connect`` / ``pymysql.connect``; tests pass a
-mock and assert the exact statement/transaction sequence. Applying to
-one server is inherently a serial, driver-side sink (the reference runs
-it in one process too) — state-scale recovery goes through the lake
-``recover`` path; this adapter is the interop endpoint for pushing a
-compacted changelog back INTO a MySQL.
+This module is that executor over the engine's OWN export files — the
+snapshot and net-change layouts of the one ``binlog_file`` codec, both
+genuine binlog-v4, so the walk is the shared validated
+``iter_binlog_events`` and QUERY bodies go through the codec's
+``decode_query_body`` (status vars skipped, so a real server's QUERY
+events parse too). No MySQL server exists in this environment, so the
+seam is a DB-API connection factory: production passes
+``mysql.connector.connect`` / ``pymysql.connect``; tests pass a mock and
+assert the exact statement/transaction sequence. Applying to one server
+is inherently a serial, driver-side sink (the reference runs it in one
+process too) — state-scale recovery goes through the lake ``recover``
+path; this adapter is the interop endpoint for pushing a compacted
+changelog back INTO a MySQL.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from mysql_binlog_spark.sinks.binlog_file import (
     UPDATE_ROWS_EVENT_V2,
     WRITE_ROWS_EVENT_V2,
     XID_EVENT,
+    decode_query_body,
     iter_binlog_events,
 )
 
@@ -77,7 +83,8 @@ class BinlogSqlApplier:
     closed with ``connection.commit()``. ``max_allowed_packet`` mirrors
     the reference's doubling growth: when a buffered rows statement
     exceeds the current value, ``SET GLOBAL max_allowed_packet = 2*len``
-    is issued before the statement (resume.go resetMaxPkgSize).
+    is issued and the session is rebuilt through ``connection_factory``
+    before the statement runs (resume.go resetMaxPkgSize).
     """
 
     def __init__(
@@ -86,8 +93,11 @@ class BinlogSqlApplier:
         max_allowed_packet: int = 4 * 1024 * 1024,
         delimiter: str = ";",
     ):
+        self._factory = connection_factory
         self._conn = connection_factory()
         self._cur = self._conn.cursor()
+        self._fde: bytes | None = None  # re-applied on every reconnect
+        self._txn_stmts: list[str] = []  # executed in the open transaction
         self.max_allowed_packet = max_allowed_packet
         self.delimiter = delimiter
         self.report = ApplyReport()
@@ -104,11 +114,41 @@ class BinlogSqlApplier:
 
     def _execute(self, sql: str) -> None:
         self._cur.execute(sql)
+        self._txn_stmts.append(sql)
         self.report.statements += 1
 
     def _commit(self) -> None:
         self._conn.commit()
         self._in_txn = False
+        self._txn_stmts = []
+
+    def _apply_fde(self) -> None:
+        """The FDE installs the session's binlog format: its own
+        committed BINLOG statement (resume.go:604-622)."""
+        self._begin()
+        self._execute(f"BINLOG '\n{_b64_lines(self._fde)}\n'{self.delimiter}")
+        self._commit()
+
+    def _grow_packet(self, need: int) -> None:
+        """resetMaxPkgSize: raise the global, reconnect so the session
+        picks it up, re-install the format, and re-open the transaction
+        the old session abandoned (replaying what it had executed)."""
+        self.max_allowed_packet = need * 2
+        self._cur.execute(
+            f"SET GLOBAL max_allowed_packet = {self.max_allowed_packet}"
+        )
+        self.report.packet_growths += 1
+        was_open, replay = self._in_txn, self._txn_stmts
+        self.close()
+        self._conn = self._factory()
+        self._cur = self._conn.cursor()
+        self._in_txn, self._txn_stmts = False, []
+        if self._fde is not None:
+            self._apply_fde()
+        if was_open:
+            self._begin()
+            for sql in replay:
+                self._execute(sql)
 
     # -- event dispatch ---------------------------------------------------
 
@@ -116,17 +156,10 @@ class BinlogSqlApplier:
         """Apply one binlog file's event stream (accepts ``.log.z``)."""
         for etype, raw, body, pos in iter_binlog_events(blob):
             if etype == FORMAT_DESCRIPTION_EVENT:
-                # the FDE installs the session's binlog format: its own
-                # committed BINLOG statement (resume.go:604-622)
-                self._begin()
-                self._execute(
-                    f"BINLOG '\n{_b64_lines(raw)}\n'{self.delimiter}"
-                )
-                self._commit()
+                self._fde = raw
+                self._apply_fde()
             elif etype == QUERY_EVENT:
-                schema_len = body[8]
-                schema = body[13:13 + schema_len].decode()
-                query = body[13 + schema_len + 1:].decode()
+                schema, query = decode_query_body(body)
                 up = query.upper()
                 if up == "BEGIN":
                     self._begin()
@@ -153,15 +186,7 @@ class BinlogSqlApplier:
                 if rflags & STMT_END_F:
                     stmt = "\n".join(self._buffer) + f"\n'{self.delimiter}"
                     if len(stmt) > self.max_allowed_packet:
-                        # grow by doubling, like resetMaxPkgSize; issued
-                        # through the same connection OUTSIDE the txn
-                        # buffer (a GLOBAL variable, not txn state)
-                        self.max_allowed_packet = len(stmt) * 2
-                        self._cur.execute(
-                            f"SET GLOBAL max_allowed_packet = "
-                            f"{self.max_allowed_packet}"
-                        )
-                        self.report.packet_growths += 1
+                        self._grow_packet(len(stmt))
                     self._execute(stmt)
                     self.report.rows_statements += 1
                     self._buffer = []
@@ -196,7 +221,8 @@ def apply_binlog_dir(
     ``.log.z`` and consolidated ``.tar`` archives, whose members apply in
     name order) — rotation segments sort by their start seq by
     construction, matching the reference's end-ts file ordering
-    (SURVEY §2.5 O3)."""
+    (SURVEY §2.5 O3). Dot-files, such as a crashed writer's
+    ``.<name>.tmp-<pid>``, are skipped."""
     import os
     import tarfile
 
@@ -205,6 +231,8 @@ def apply_binlog_dir(
         for root, _dirs, names in sorted(os.walk(path)):
             for n in sorted(names):
                 full = os.path.join(root, n)
+                if n.startswith("."):
+                    continue
                 if n.endswith(".tar"):
                     with tarfile.open(full) as tf:
                         for member in sorted(
@@ -214,7 +242,7 @@ def apply_binlog_dir(
                                 applier.apply_bytes(
                                     tf.extractfile(member).read()
                                 )
-                elif ".log" in n:
+                elif n.endswith((".log", ".log.z")):
                     applier.apply_file(full)
     finally:
         applier.close()

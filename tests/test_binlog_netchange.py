@@ -245,38 +245,6 @@ def test_diff_export_roundtrip_equals_diff(spark, tmp_path):
     assert want[("r1", "b")][0] == "D" and want[("r1", "b")][1] == "v2"
 
 
-def test_rotation_size_expr_matches_python_encoder(spark):
-    """The distributed rotation assignment uses nc_row_size_expr; the
-    byte encoder uses _nc_row_size. Pin them together so the segment
-    rule can never drift from the actual encoded bytes."""
-    from mysql_binlog_spark.sinks.binlog_file import (
-        _key_bytes,
-        _nc_encode_row,
-        _nc_row_size,
-        nc_row_size_expr,
-    )
-
-    rows = [
-        ("ri", f"p{i}", op, 10 + i,
-         None if op == "I" else "o" * (i + 1),
-         None if op == "D" else "n" * (2 * i + 1),
-         None if op == "D" else f"c{i}")
-        for i, op in enumerate(["I", "D", "U", "I", "U", "D"])
-    ]
-    got = (
-        _changes_df(spark, rows)
-        .select("path", nc_row_size_expr().alias("sz"))
-        .collect()
-    )
-    by_path = {r["path"]: r["sz"] for r in got}
-    for repo, path, op, _seq, old_c, new_c, new_cm in rows:
-        key = _key_bytes(repo, path)
-        want = _nc_row_size(op, key, old_c, new_c, new_cm)
-        assert by_path[path] == want, (path, op)
-        # and both equal the actual encoded byte length
-        assert want == len(_nc_encode_row(op, key, old_c, new_c, new_cm))
-
-
 def test_rotation_assignment_is_distributed(spark, tmp_path):
     """With max_file_bytes set, the writer groups by (repo, segment) —
     a hot repo's segments land in MULTIPLE writer tasks with bounded

@@ -213,3 +213,100 @@ def test_apply_dir_walks_rotated_compressed_exports(spark, tmp_path):
     assert report2.transactions == report.transactions
     assert report2.rows_statements == report.rows_statements
     assert [s for k, s in conn2.log] == [s for k, s in conn.log]
+
+
+def _stream(events) -> bytes:
+    """Frame (etype, body) pairs as one binlog file."""
+    from mysql_binlog_spark.sinks.binlog_file import BINLOG_MAGIC, _event
+
+    out = bytearray(BINLOG_MAGIC)
+    for etype, body in events:
+        out.extend(_event(etype, body, len(out)))
+    return bytes(out)
+
+
+def test_query_event_status_vars_are_skipped():
+    """A real server's QUERY events carry a status-vars block between the
+    post-header and the schema; its length (body[11:13]) must be skipped,
+    not read as schema and statement."""
+    import struct
+
+    from mysql_binlog_spark.sinks.binlog_file import (
+        FORMAT_DESCRIPTION_EVENT,
+        QUERY_EVENT,
+        _fde_body,
+    )
+
+    status = bytes([0x00, 0, 0, 0, 0, 0x01, 0, 0, 0, 0, 0, 0, 0, 0])
+    query = (struct.pack("<IIBHH", 7, 0, len(b"maindb"), 0, len(status))
+             + status + b"maindb\x00TRUNCATE TABLE r2")
+    conn = MockConn()
+    report = BinlogSqlApplier(lambda: conn).apply_bytes(
+        _stream([(FORMAT_DESCRIPTION_EVENT, _fde_body()), (QUERY_EVENT, query)])
+    )
+    stmts = [s for k, s in conn.log if k == "exec"]
+    assert stmts[-2:] == ["use maindb", "TRUNCATE TABLE r2"]
+    assert report.ddl_statements == 1
+
+
+def test_apply_dir_skips_crashed_writer_temp_files(tmp_path):
+    """A writer that dies between write and rename leaves
+    ``.<name>.log.tmp-<pid>``; the directory walk must not apply it."""
+    d = tmp_path / "r1"
+    d.mkdir()
+    blob = build_binlog_file(SNAP_ROWS, "r1")
+    (d / "binlog-r1.log").write_bytes(blob)
+    (d / ".binlog-r2.log.tmp-4242").write_bytes(blob[: len(blob) // 2])
+    (d / "notes.logbook").write_bytes(b"not a binlog")
+    report = apply_binlog_dir(MockConn, str(tmp_path))
+    assert report.files == 1 and report.xids == [1]
+
+
+def test_packet_growth_reconnects_and_reapplies_format():
+    """resetMaxPkgSize: after SET GLOBAL the session is rebuilt through the
+    factory (a session's max_allowed_packet is fixed at connect time), the
+    FDE is re-applied as its own committed BINLOG statement, the open
+    transaction is re-opened with what it had already executed, and only
+    then does the oversized statement run."""
+    from mysql_binlog_spark.sinks.binlog_file import (
+        TABLE_MAP_EVENT,
+        WRITE_ROWS_EVENT_V2,
+        XID_EVENT,
+        iter_binlog_events,
+    )
+
+    def events(rows):
+        return [(t, body) for t, _raw, body, _pos in
+                iter_binlog_events(build_binlog_file(rows, "r1"))]
+
+    small = events(SNAP_ROWS[:1])
+    big = events([("r1", "big.txt", "c9", None, "v" * 400)])
+    # one transaction, two statements: the second outgrows the packet
+    rows_stmt = [(t, b) for t, b in big
+                 if t in (TABLE_MAP_EVENT, WRITE_ROWS_EVENT_V2)]
+    blob = _stream(
+        [e for e in small if e[0] != XID_EVENT][:-1]  # drop XID and ROTATE
+        + rows_stmt
+        + [(XID_EVENT, (11).to_bytes(8, "little"))]
+    )
+    conns: list[MockConn] = []
+
+    def factory():
+        conns.append(MockConn())
+        return conns[-1]
+
+    applier = BinlogSqlApplier(factory, max_allowed_packet=400)
+    report = applier.apply_bytes(blob)
+    assert report.packet_growths == 1 and len(conns) == 2
+    old, new = conns
+    old_stmts = [s for k, s in old.log if k == "exec"]
+    fde_stmt, small_stmt = old_stmts[1], old_stmts[3]
+    assert old_stmts[-1].startswith("SET GLOBAL max_allowed_packet")
+    assert ("commit", None) not in old.log[old.log.index(("exec", small_stmt)):]
+    assert _tags(new.log) == [
+        "BEGIN", "BINLOG", "commit",            # format re-installed
+        "BEGIN", "BINLOG", "BINLOG", "commit",  # replayed + oversized, XID
+    ]
+    new_stmts = [s for k, s in new.log if k == "exec"]
+    assert new_stmts[1] == fde_stmt and new_stmts[3] == small_stmt
+    assert len(new_stmts[4]) > 400 and report.xids == [11]
